@@ -2,8 +2,7 @@
 
 Scanned-PDF image XObjects and bilevel TIFFs overwhelmingly carry
 CCITTFaxDecode (PDF) / compression 3-4 (TIFF) data; until round 6 these
-surfaced as named error records (``kernels/pdfobj.py`` harvest_images,
-``kernels/tiff.py``). This module implements the codec from the public
+surfaced as named error records (``kernels/tiff.py``). This module implements the codec from the public
 ITU-T specs:
 
 - Modified Huffman run-length tables (T.4 §2.2: white/black terminating

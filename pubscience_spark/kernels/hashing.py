@@ -49,16 +49,21 @@ def _hash64(s: str) -> int:
 # spark.python.worker.reuse is on). Values are pure md5 — the cache
 # cannot change any hash, only skip recomputing it. Capacity-capped:
 # on overflow new words are hashed without being cached (first-come
-# residency is fine for Zipf — the common words arrive early).
+# residency is fine for Zipf — the common words arrive early). Tokens
+# longer than _WORD_CACHE_MAX_LEN are never cached: the entry cap alone
+# bounds words, not bytes, and untrusted text made of long unbroken
+# tokens would otherwise pin hundreds of MB per worker.
 _WORD_CACHE: dict[str, int] = {}
 _WORD_CACHE_MAX = 1 << 19  # ~0.5M words ≈ ≤100 MB per Python worker
+_WORD_CACHE_MAX_LEN = 64
 
 
 def word_hash64(w: str) -> int:
     h = _WORD_CACHE.get(w)
     if h is None:
         h = _hash64(w)
-        if len(_WORD_CACHE) < _WORD_CACHE_MAX:
+        if len(w) <= _WORD_CACHE_MAX_LEN \
+                and len(_WORD_CACHE) < _WORD_CACHE_MAX:
             _WORD_CACHE[w] = h
     return h
 

@@ -1,6 +1,6 @@
 """JPEG (ITU T.81 DCT, Huffman entropy coding) codec — stdlib + numpy.
 
-JPEG is the dominant web image format; without it the multimodal tier's
+JPEG is the dominant web image format; without it the image decoders'
 "decode real bytes" claim had a hole (JPEG surfaced as an
 ``unsupported-format`` error row). This implements the Huffman DCT
 processes from the public spec:

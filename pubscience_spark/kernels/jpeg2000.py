@@ -1,6 +1,6 @@
 """JPEG 2000 Part 1 (ISO/IEC 15444-1 / ITU-T T.800) decoder and mirror
 encoder — the PDF ``JPXDecode`` filter and the last common scanned-
-document codec missing from the media tier (VERDICT r6 #3: "JPX ... the
+document codec missing from the image decoders (VERDICT r6 #3: "JPX ... the
 most real-world-relevant residue" after CCITT/JBIG2).
 
 From the PUBLIC specification only (ITU-T T.800 08/2002). The arithmetic
@@ -1209,7 +1209,7 @@ def to_display_uint8(decoded: dict) -> np.ndarray:
     """Per-component depth-aware display mapping of a
     :func:`decode_jpx` result → (H, W, C) uint8: 8-bit passes through,
     deeper samples keep their top 8 bits (the TIFF-path convention),
-    shallower samples scale to full range (the `_bilevel_display`
+    shallower samples scale to full range (the bilevel display
     convention — a bilevel JPX must come out 0/255, not 0/1), and
     signed components shift to mid-gray first."""
     arr = decoded["samples"]

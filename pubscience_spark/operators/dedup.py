@@ -62,13 +62,13 @@ def _ensure_persisted(df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
 
 
 def unpersist_input(marked: DataFrame) -> bool:
-    """Release the cache ``mark_duplicates_multi`` /
-    ``mark_duplicates_incremental`` created internally (no-op when the
-    caller had persisted the input itself). Call AFTER the terminal action
-    on the marked DataFrame — the cache is what keeps the upstream
-    extraction from running once per join side. Returns True if a cache
-    was released. Operators that persist more than one frame (e.g.
-    ``drop_duplicate_spans``: input + grams) tag a LIST of handles."""
+    """Release the cache ``mark_duplicates_incremental`` created
+    internally (no-op when the caller had persisted the input itself).
+    Call AFTER the terminal action on the marked DataFrame — the cache is
+    what keeps the upstream extraction from running once per join side.
+    Returns True if a cache was released. Operators that persist more
+    than one frame (e.g. ``drop_duplicate_spans``: input + grams) tag a
+    LIST of handles."""
     handle = getattr(marked, "_ps_persisted_input", None)
     if handle is None:
         return False
@@ -111,7 +111,7 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
            if f.name in rest and not _is_orderable(f.dataType)]
     if bad:
         raise ValueError(
-            "mark_duplicates_multi/incremental: non-key column(s) "
+            "mark_duplicates_incremental: non-key column(s) "
             f"{bad} are not orderable (map-typed), so value-identical "
             "(order_col, keys) tuples cannot be collapsed "
             "deterministically — drop or serialize (to_json) these "
@@ -127,71 +127,41 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
     return clean.unionByName(amb.select(*clean.columns))
 
 
-def mark_duplicates_multi(df: DataFrame, key_cols: list[str],
-                          order_col: str = "url",
-                          flag_col: str = "is_duplicate") -> DataFrame:
-    """OR-combined duplicate marking over several keys, shuffle-lean.
-
-    Naive per-key windows shuffle the FULL rows once per key — at 100 TB
-    that is two+ full-data shuffles of multi-KB text rows. Here the windows
-    run over a slim ``(order_col, keys)`` projection (tens of bytes/row),
-    and a single join on the distinct ``(order_col, keys)`` tuple carries
-    the flag back, so the wide rows shuffle exactly once. ``order_col``
-    need not be unique (round-7 review: the same url re-fetched with a
-    changed body is two distinct tuples, each flagged independently);
-    rows fully identical on ``(order_col, *key_cols)`` collapse to one
-    deterministic survivor via :func:`_collapse_tuple_copies`.
-
-    If the input was not already persisted this operator persists it
-    (both join sides read it); release that cache with
-    :func:`unpersist_input` on the returned DataFrame after your action.
-    """
-    df, persisted = _ensure_persisted(df)
-    slim = (df.select(order_col, *key_cols)
-            .groupBy(order_col, *key_cols)
-            .agg(F.count(F.lit(1)).alias("__tuple_n")))
-    flag = F.lit(False)
-    for key in key_cols:
-        # keeper-per-key via min() agg, NOT a row_number window: min() has
-        # map-side partial aggregation, so a viral page duplicated millions
-        # of times combines per-mapper instead of sorting one hot partition
-        # (windows have no combiner — the 10^12-doc straggler). The join
-        # back is slim-vs-tiny; AQE skew-join splits any hot probe key.
-        # Keys must be non-null (extraction always emits sha256/dedup_key).
-        keepers = slim.groupBy(key).agg(
-            F.min(order_col).alias(f"__keep_{key}"))
-        slim = slim.join(keepers, key)
-        flag = flag | (F.col(order_col) != F.col(f"__keep_{key}"))
-    flags = slim.select(order_col, *key_cols, "__tuple_n",
-                        flag.alias(flag_col))
-    # shuffle-hash join, building on the slim flags side: SMJ would SORT the
-    # wide rows (as costly as the per-key shuffles this function removes)
-    out = df.join(flags.hint("shuffle_hash"), [order_col, *key_cols])
-    out = _collapse_tuple_copies(out, [order_col, *key_cols], flag_col)
-    out._ps_persisted_input = persisted
-    return out
-
-
 def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
                                 order_col: str = "url",
                                 index_df: DataFrame | None = None,
                                 flag_col: str = "is_duplicate"
                                 ) -> tuple[DataFrame, DataFrame]:
-    """Duplicate marking that honors keepers committed by EARLIER runs.
+    """The keep-first primitive: OR-combined duplicate marking over
+    several keys, shuffle-lean, honoring keepers committed by EARLIER runs.
 
-    Within one run, ``mark_duplicates_multi`` is enough; across
-    checkpoint-resume runs it is not — a reprocessed bucket only sees its
-    own rows, so a duplicate whose keeper committed in another bucket would
-    go unmarked. ``index_df`` is the persistent keeper index
-    ``(key_name, key, keeper)``; committed keepers always win (they are
-    already written as non-duplicates and cannot be retracted).
+    Naive per-key windows shuffle the FULL rows once per key — at 100 TB
+    that is two+ full-data shuffles of multi-KB text rows. Here the
+    keepers come from a slim ``(order_col, keys)`` projection (tens of
+    bytes/row), and a single join on the distinct ``(order_col, keys)``
+    tuple carries the flag back, so the wide rows shuffle exactly once.
+    ``order_col`` need not be unique (the same url re-fetched with a
+    changed body is two distinct tuples, each flagged independently);
+    rows fully identical on ``(order_col, *key_cols)`` collapse to one
+    deterministic survivor via :func:`_collapse_tuple_copies`.
+
+    Across checkpoint-resume runs the run's own keepers are not enough —
+    a reprocessed bucket only sees its own rows, so a duplicate whose
+    keeper committed in another bucket would go unmarked. ``index_df``
+    is the persistent keeper index ``(key_name, key, keeper)``; committed
+    keepers always win (they are already written as non-duplicates and
+    cannot be retracted). With ``index_df=None`` only this run's rows
+    decide.
 
     Returns ``(marked_df, new_index_rows)`` — append ``new_index_rows`` to
-    the index table after the data write commits. Appends may duplicate
-    under crash-retry; ``load_keeper_index`` re-aggregates min() on read,
-    which keeps the index idempotent. As with ``mark_duplicates_multi``,
-    an unpersisted input is persisted internally — release it with
-    :func:`unpersist_input` on ``marked_df`` after the terminal action.
+    the index table after the data write commits (callers without an
+    index take ``[0]``; the index frame is lazy, so it costs nothing
+    unused). Appends may duplicate under crash-retry;
+    ``load_keeper_index`` re-aggregates min() on read, which keeps the
+    index idempotent. If the input was not already persisted this
+    operator persists it (both join sides read it); release that cache
+    with :func:`unpersist_input` on ``marked_df`` after the terminal
+    action.
     """
     spark = df.sparkSession
     df, persisted = _ensure_persisted(df)
@@ -205,6 +175,12 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
     flag = F.lit(False)
     new_index = None
     for key in key_cols:
+        # keeper-per-key via min() agg, NOT a row_number window: min() has
+        # map-side partial aggregation, so a viral page duplicated millions
+        # of times combines per-mapper instead of sorting one hot partition
+        # (windows have no combiner — the 10^12-doc straggler). The join
+        # back is slim-vs-tiny; AQE skew-join splits any hot probe key.
+        # Keys must be non-null (extraction always emits sha256/dedup_key).
         run_keepers = slim.groupBy(key).agg(
             F.min(order_col).alias("__run_keep"))
         if index_df is not None:
@@ -230,6 +206,8 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
         flag = flag | (F.col(order_col) != F.col(f"__keep_{key}"))
     flags = slim.select(order_col, *key_cols, "__tuple_n",
                         flag.alias(flag_col))
+    # shuffle-hash join, building on the slim flags side: SMJ would SORT the
+    # wide rows (as costly as the per-key shuffles this function removes)
     marked = df.join(flags.hint("shuffle_hash"),
                      [order_col, *key_cols])
     marked = _collapse_tuple_copies(marked, [order_col, *key_cols],

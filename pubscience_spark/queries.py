@@ -56,7 +56,7 @@ def q_exact_dedup(spark, sf_dir):
     ``min(doc_id)`` — a HashAggregate with map-side partial aggregation
     replaces the window sort (guide §2.3 "aggregate before you shuffle";
     a viral duplicate combines per-mapper instead of sorting one hot
-    partition — the ``mark_duplicates_multi`` rationale). Identical
+    partition — the ``mark_duplicates_incremental`` rationale). Identical
     output; the full-row survivors path stays
     :func:`operators.dedup.exact_dedup`."""
     return (_docs(spark, sf_dir)

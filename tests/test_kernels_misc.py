@@ -129,6 +129,16 @@ def test_simhash_similar_texts_close():
     assert d_sim < d_diff
 
 
+def test_word_hash_cache_skips_long_tokens():
+    """The word-hash cache bounds bytes, not just entries: a long
+    unbroken token hashes the same but is never cached."""
+    token = "a" * 10_000
+    before = len(hashing._WORD_CACHE)
+    assert hashing.word_hash64(token) == hashing._hash64(token)
+    assert len(hashing._WORD_CACHE) == before
+    assert token not in hashing._WORD_CACHE
+
+
 def test_sha256_matches_stdlib():
     import hashlib as h
     assert hashing.sha256_hex("abc") == h.sha256(b"abc").hexdigest()

@@ -155,18 +155,23 @@ def test_duplicate_marking(spark, pages_path, tmp_path):
 
 
 def test_dedup_strategies_equivalent(spark, pages_path, tmp_path):
-    """'windows' (wide shuffles) and 'slim-join' (slim windows + SHJ) must
-    mark exactly the same rows."""
+    """The pipeline's slim-join keep-first marking flags exactly the rows
+    that row_number windows over the wide extracted rows flag (keep first
+    by url on ``dedup_key``, then on ``sha256``, OR-ed)."""
+    from pubscience_spark.operators import dedup as dedup_ops
     pages = spark.read.parquet(pages_path)
-    flags = {}
-    for strat in ("windows", "slim-join"):
-        out = str(tmp_path / strat)
-        r = run_extraction(spark, pages, out, n_buckets=4,
-                           dedup_strategy=strat)
-        rows = spark.read.parquet(r["extracted_path"]) \
-            .select("url", "is_duplicate").collect()
-        flags[strat] = {row["url"]: row["is_duplicate"] for row in rows}
-    assert flags["windows"] == flags["slim-join"]
+    ref = dedup_ops.mark_duplicates(
+        extract_pages(pages.select("url", "html")), "dedup_key", "url") \
+        .withColumnRenamed("is_duplicate", "is_prefix_duplicate")
+    ref = dedup_ops.mark_duplicates(ref, "sha256", "url") \
+        .withColumn("is_duplicate",
+                    F.col("is_duplicate") | F.col("is_prefix_duplicate"))
+    windows = {row["url"]: row["is_duplicate"]
+               for row in ref.select("url", "is_duplicate").collect()}
+    r = run_extraction(spark, pages, str(tmp_path / "out"), n_buckets=4)
+    rows = spark.read.parquet(r["extracted_path"]) \
+        .select("url", "is_duplicate").collect()
+    assert windows == {row["url"]: row["is_duplicate"] for row in rows}
 
 
 def test_empty_input_is_a_noop(spark, tmp_path):

@@ -3,7 +3,7 @@ codecs and the dedup robustness fixes (ADVICE r8).
 
 All codec cases must fail FAST with a named error — the point of the
 guards is that a ~70-byte crafted stream can no longer buy minutes of
-CPU or gigabytes of RAM inside the untrusted-PDF image harvest.
+CPU or gigabytes of RAM inside the decoder.
 """
 
 from __future__ import annotations
@@ -117,25 +117,26 @@ def test_jp2_valid_streams_still_decode():
 # ------------------------------------------------------------- dedup
 
 
-def test_mark_duplicates_multi_map_column_named_error(spark):
+def test_mark_duplicates_incremental_map_column_named_error(spark):
     """A map-typed non-key column cannot be collapsed via min(struct)
     — the operator must raise a NAMED error at build time, not an
     opaque analysis failure (ADVICE r8)."""
-    from pubscience_spark.operators.dedup import mark_duplicates_multi
+    from pubscience_spark.operators.dedup import \
+        mark_duplicates_incremental
     df = spark.createDataFrame(
         [("u1", "k1", {"a": 1})],
         "url string, key string, props map<string,int>")
     with pytest.raises(ValueError, match="not orderable"):
-        mark_duplicates_multi(df, ["key"], "url")
+        mark_duplicates_incremental(df, ["key"], "url")
 
 
-def test_mark_duplicates_multi_plain_columns_unaffected(spark):
-    from pubscience_spark.operators.dedup import (mark_duplicates_multi,
-                                                  unpersist_input)
+def test_mark_duplicates_incremental_plain_columns_unaffected(spark):
+    from pubscience_spark.operators.dedup import (
+        mark_duplicates_incremental, unpersist_input)
     df = spark.createDataFrame(
         [("u1", "k1", "b1"), ("u2", "k1", "b2"), ("u1", "k1", "b1")],
         "url string, key string, body string")
-    out = mark_duplicates_multi(df, ["key"], "url")
+    out = mark_duplicates_incremental(df, ["key"], "url")[0]
     rows = {(r["url"], r["is_duplicate"]) for r in out.collect()}
     assert rows == {("u1", False), ("u2", True)}
     unpersist_input(out)

@@ -44,10 +44,10 @@ def main() -> None:
     # 1. extraction core
     pages = spark.createDataFrame(
         [("u", bytearray(b"<html></html>"))], "url string, html binary")
-    core = dedup_ops.mark_duplicates_multi(
+    core = dedup_ops.mark_duplicates_incremental(
         extract_pages(pages.withColumn("bucket", bucket_col(8))
                       .repartition(8, "bucket").select("url", "html")),
-        ["sha256", "dedup_key"], "url")
+        ["sha256", "dedup_key"], "url")[0]
     sections.append((
         "Extraction core (repartition → mapInPandas → skew-safe dedup mark)",
         "One salted-bucket Exchange feeds ArrowEvalPython/MapInPandas; "
