@@ -66,9 +66,13 @@ def unpersist_input(marked: DataFrame) -> bool:
     internally (no-op when the caller had persisted the input itself).
     Call AFTER the terminal action on the marked DataFrame — the cache is
     what keeps the upstream extraction from running once per join side.
-    Returns True if a cache was released. Operators that persist more
-    than one frame (e.g. ``drop_duplicate_spans``: input + grams) tag a
-    LIST of handles."""
+    Returns True if the input cache was released. Operators that persist
+    more than one frame (e.g. ``drop_duplicate_spans``: input + grams) tag
+    a LIST of handles; caches an operator holds beside its input (the
+    keeper frames of ``mark_duplicates_incremental``) are released too
+    but do not count towards the return value."""
+    for h in getattr(marked, "_ps_persisted_aux", ()):
+        h.unpersist()
     handle = getattr(marked, "_ps_persisted_input", None)
     if handle is None:
         return False
@@ -102,7 +106,8 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
     ADVICE r8). The ``__tuple_n``
     column (occurrence count, computed on the slim side) routes the
     overwhelmingly common unique tuples around the wide groupBy, so the
-    collapse shuffles only the rare ambiguous rows."""
+    collapse shuffles only the rare ambiguous rows, and none at all when
+    the tuple leads with the input's partition column."""
     clean = marked.where(F.col("__tuple_n") == 1).drop("__tuple_n")
     amb = marked.where(F.col("__tuple_n") > 1).drop("__tuple_n")
     rest = [c for c in clean.columns
@@ -119,9 +124,7 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
     if rest:
         amb = (amb.groupBy(*tuple_cols, flag_col)
                .agg(F.min(F.struct(*rest)).alias("__rest"))
-               .select(*tuple_cols, flag_col,
-                       *[F.col("__rest").getField(c).alias(c)
-                         for c in rest]))
+               .select(*tuple_cols, flag_col, "__rest.*"))
     else:
         amb = amb.distinct()
     return clean.unionByName(amb.select(*clean.columns))
@@ -130,7 +133,8 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
 def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
                                 order_col: str = "url",
                                 index_df: DataFrame | None = None,
-                                flag_col: str = "is_duplicate"
+                                flag_col: str = "is_duplicate",
+                                partition_col: str | None = None
                                 ) -> tuple[DataFrame, DataFrame]:
     """The keep-first primitive: OR-combined duplicate marking over
     several keys, shuffle-lean, honoring keepers committed by EARLIER runs.
@@ -145,6 +149,13 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
     rows fully identical on ``(order_col, *key_cols)`` collapse to one
     deterministic survivor via :func:`_collapse_tuple_copies`.
 
+    ``partition_col`` names a column that is a function of ``order_col``
+    and by which ``df`` is already hash-partitioned (the pipeline's
+    bucket). It joins the tuple, and the slim flags are repartitioned by
+    it, so with ``spark.sql.requireAllClusterKeysForCoPartition=false``
+    at execution the flag join and the collapse reuse the input's
+    partitioning: the wide rows do not shuffle here at all.
+
     Across checkpoint-resume runs the run's own keepers are not enough —
     a reprocessed bucket only sees its own rows, so a duplicate whose
     keeper committed in another bucket would go unmarked. ``index_df``
@@ -155,25 +166,28 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
 
     Returns ``(marked_df, new_index_rows)`` — append ``new_index_rows`` to
     the index table after the data write commits (callers without an
-    index take ``[0]``; the index frame is lazy, so it costs nothing
-    unused). Appends may duplicate under crash-retry;
+    index take ``[0]``). The per-key keeper frames are cached once and
+    feed both outputs. Appends may duplicate under crash-retry;
     ``load_keeper_index`` re-aggregates min() on read, which keeps the
     index idempotent. If the input was not already persisted this
     operator persists it (both join sides read it); release that cache
-    with :func:`unpersist_input` on ``marked_df`` after the terminal
-    action.
+    and the keeper caches with :func:`unpersist_input` on ``marked_df``
+    after the terminal actions.
     """
     spark = df.sparkSession
     df, persisted = _ensure_persisted(df)
+    tuple_cols = [order_col, *key_cols]
+    if partition_col is not None:
+        tuple_cols.insert(0, partition_col)
     # distinct tuples + occurrence count: the flag joins back on the
     # FULL tuple, so a repeated order_col value (same url re-fetched
     # with a changed body in one delta) cannot multiply rows; fully
     # identical tuples collapse deterministically (round-7 review)
-    slim = (df.select(order_col, *key_cols)
-            .groupBy(order_col, *key_cols)
+    slim = (df.select(*tuple_cols).groupBy(*tuple_cols)
             .agg(F.count(F.lit(1)).alias("__tuple_n")))
     flag = F.lit(False)
     new_index = None
+    keeper_caches = []
     for key in key_cols:
         # keeper-per-key via min() agg, NOT a row_number window: min() has
         # map-side partial aggregation, so a viral page duplicated millions
@@ -197,6 +211,9 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
             keepers = run_keepers.select(
                 key, F.col("__run_keep").alias(f"__keep_{key}"),
                 F.lit(True).alias("__is_new"))
+        # cached once: the flag join and the index rows both read it
+        keepers = keepers.cache()
+        keeper_caches.append(keepers)
         fresh = (keepers.where("__is_new")
                  .select(F.lit(key).alias("key_name"),
                          F.col(key).cast("string").alias("key"),
@@ -204,15 +221,15 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
         new_index = fresh if new_index is None else new_index.unionByName(fresh)
         slim = slim.join(keepers.drop("__is_new"), key)
         flag = flag | (F.col(order_col) != F.col(f"__keep_{key}"))
-    flags = slim.select(order_col, *key_cols, "__tuple_n",
-                        flag.alias(flag_col))
+    flags = slim.select(*tuple_cols, "__tuple_n", flag.alias(flag_col))
+    if partition_col is not None:
+        flags = flags.repartition(partition_col)
     # shuffle-hash join, building on the slim flags side: SMJ would SORT the
     # wide rows (as costly as the per-key shuffles this function removes)
-    marked = df.join(flags.hint("shuffle_hash"),
-                     [order_col, *key_cols])
-    marked = _collapse_tuple_copies(marked, [order_col, *key_cols],
-                                    flag_col)
+    marked = df.join(flags.hint("shuffle_hash"), tuple_cols)
+    marked = _collapse_tuple_copies(marked, tuple_cols, flag_col)
     marked._ps_persisted_input = persisted
+    marked._ps_persisted_aux = keeper_caches
     if new_index is None:
         new_index = spark.createDataFrame(
             [], "key_name string, key string, keeper string")
@@ -226,8 +243,14 @@ def _read_index_or_none(spark, path: str) -> DataFrame | None:
     storage/permission failure or corrupted parquet used to be
     swallowed as 'no index', silently resetting the cross-run dedup
     guarantee (boilerplate committed by earlier runs re-kept) — genuine
-    read failures must propagate (ADVICE r8)."""
+    read failures must propagate (ADVICE r8). A missing path is probed
+    through the FileSystem API first: a failed Spark read costs far more
+    and logs a stack trace."""
     from pyspark.errors import AnalysisException
+
+    from ..plans import fsutil
+    if not fsutil.exists(spark, path):
+        return None
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:

@@ -25,21 +25,25 @@ def spread(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     projection. Only spread SLIM projections; the shuffle moves
     whatever columns the frame carries.
 
-    The probe result is MEMOIZED per (session, analyzed-plan semantic
-    hash, input file list, target): ``df.rdd`` pays a full physical
-    planning + RDD conversion round-trip (~40-800 ms of driver time,
+    The probe result is MEMOIZED per (Spark application id, analyzed-
+    plan semantic hash, input file list, target): ``df.rdd`` pays a full
+    physical planning + RDD conversion round-trip (~40-800 ms of driver time,
     round-8 measurement) and repeated invocations of the same query
     re-probe an identical frame every time. Same logical plan over the
     same files in the same session splits identically, so the cached
     count is exact. (A file overwritten in-place with a different size
-    mid-session would go stale — inputs here are immutable runs.)
+    mid-session would go stale — inputs here are immutable runs.) The
+    application id, not ``id(session)``, keys the memo: a session stopped
+    and restarted in one process can reuse the old object's ``id()``
+    while its split settings differ.
     """
     sess = df.sparkSession
     target = sess.sparkContext.defaultParallelism
     thresh = max(1, int(target * min_ratio))
     key = None
     try:
-        key = (id(sess), df._jdf.queryExecution().analyzed().semanticHash(),
+        key = (sess.sparkContext.applicationId,
+               df._jdf.queryExecution().analyzed().semanticHash(),
                tuple(df.inputFiles()), target)
     except Exception:
         pass

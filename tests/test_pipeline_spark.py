@@ -8,6 +8,7 @@ exactly those bytes regardless of partitioning, ordering, or resume state.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,6 +134,97 @@ def test_partial_resume_preserves_global_dup_flags(spark, pages_path,
            spark.read.parquet(r1["extracted_path"])
            .select("url", "is_duplicate").collect()}
     assert got == want
+
+
+def test_resume_adopts_committed_bucket_count(spark, pages_path, tmp_path):
+    """Lineage records ``n_buckets``. Bucket b of one count holds other
+    urls than bucket b of another, so resuming with a different count
+    would drop and duplicate rows: ``n_buckets=None`` adopts the
+    committed count (the planned default here would be 4), and an
+    explicit different count raises."""
+    import shutil
+    from pubscience_spark.plans.pipeline import BucketCountMismatch
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out")
+    r1 = run_extraction(spark, pages, out, n_buckets=5)
+    lin = spark.read.parquet(r1["lineage_path"]).collect()
+    assert {r["n_buckets"] for r in lin} == {5}
+    keep = [r for r in lin if r["bucket"] != lin[0]["bucket"]]
+    shutil.rmtree(r1["lineage_path"])
+    spark.createDataFrame(keep).write.parquet(r1["lineage_path"])
+    with pytest.raises(BucketCountMismatch, match="n_buckets=5"):
+        run_extraction(spark, pages, out, n_buckets=4)
+    r2 = run_extraction(spark, pages, out)
+    assert (r2["buckets"], r2["buckets_skipped"]) == (5, 4)
+    ext = spark.read.parquet(r1["extracted_path"])
+    assert ext.count() == r1["rows_written"]
+    assert ext.select("url").distinct().count() == r1["rows_written"]
+
+
+def _write_exchanges(spark, path):
+    """``(partitioning, input columns)`` of every Exchange in the executed
+    (post-AQE) plan of the last bucketed write into ``path``, cached
+    sub-plans included. The SQL status store keeps the final plan graph;
+    the formatted plan text maps each exchange's plan_id to its input."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = None
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if f"{path}, false, [bucket#" in e.physicalPlanDescription():
+            if last is None or e.executionId() > last.executionId():
+                last = e
+    assert last is not None, f"no write into {path} recorded"
+    inputs = dict((pid, cols) for cols, pid in re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: [^\n]*\[plan_id=(\d+)\]",
+        last.physicalPlanDescription()))
+    nodes = store.planGraph(last.executionId()).allNodes()
+    out = []
+    for i in range(nodes.size()):
+        desc = nodes.apply(i).desc()
+        m = re.match(r"Exchange (.*), \w+, \[plan_id=(\d+)\]$", desc)
+        if m:
+            out.append((m.group(1), inputs[m.group(2)]))
+    return out
+
+
+def test_data_write_shuffles_wide_rows_once(spark, pages_path, tmp_path):
+    """The wide extracted rows cross exactly one exchange, the salted
+    bucket repartition; the flag join and the write reuse it, so each
+    write task owns whole buckets: one parquet file per bucket."""
+    pages = spark.read.parquet(pages_path)
+    r = run_extraction(spark, pages, str(tmp_path / "out"), n_buckets=5)
+    exchanges = _write_exchanges(spark, r["extracted_path"])
+    wide = [part for part, cols in exchanges if "extracted_text" in cols]
+    assert len(wide) == 1, exchanges
+    assert re.match(r"hashpartitioning\(bucket#\d+L?, 5\)$", wide[0])
+    files = {}
+    for root, _d, names in os.walk(r["extracted_path"]):
+        n = sum(f.endswith(".parquet") for f in names)
+        if n:
+            files[os.path.basename(root)] = n
+    assert files == {f"bucket={b}": 1 for b in range(5)}
+
+
+def test_co_partition_conf_is_scoped_to_the_write(spark, pages_path,
+                                                  tmp_path, monkeypatch):
+    """run_extraction relaxes spark.sql.requireAllClusterKeysForCoPartition
+    for its data write only and restores it, also when the write raises."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    key = "spark.sql.requireAllClusterKeysForCoPartition"
+    before = spark.conf.get(key)
+    pages = spark.read.parquet(pages_path)
+    run_extraction(spark, pages, str(tmp_path / "ok"), n_buckets=3)
+    assert spark.conf.get(key) == before
+
+    def failing_write(self, path, *args, **kwargs):
+        raise RuntimeError(f"write into {path} failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="extracted failed"):
+        run_extraction(spark, pages, str(tmp_path / "bad"), n_buckets=3)
+    assert spark.conf.get(key) == before
 
 
 def test_duplicate_marking(spark, pages_path, tmp_path):

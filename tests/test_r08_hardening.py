@@ -161,3 +161,46 @@ def test_index_loaders_missing_vs_corrupt(spark, tmp_path):
             df = loader(spark, str(corrupt))
             assert df is not None       # must not be swallowed to None
             df.collect()                # lazy failure also acceptable
+
+
+def test_missing_index_path_skips_the_spark_read(spark, tmp_path,
+                                                 monkeypatch):
+    """A missing path is answered by the FileSystem probe; only an
+    existing path (here: an empty directory) goes through the Spark read,
+    whose failure costs far more and logs a stack trace."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from pubscience_spark.operators import dedup as D
+    reads = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **kwargs):
+        reads.append(paths)
+        return real(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    assert D._read_index_or_none(spark, str(tmp_path / "nope")) is None
+    assert reads == []
+    (tmp_path / "empty").mkdir()
+    assert D._read_index_or_none(spark, str(tmp_path / "empty")) is None
+    assert len(reads) == 1
+
+
+def test_spread_memo_is_keyed_by_application(spark, tmp_path, monkeypatch):
+    """A session restarted in one process can reuse the stopped session's
+    ``id()``; spread()'s partition-count memo is keyed by the Spark
+    application id, so an entry left by another application under the
+    same ``id()`` is never served (ADVICE r8)."""
+    from pubscience_spark.operators import util
+    path = str(tmp_path / "one_split.parquet")
+    spark.range(50).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().analyzed().semanticHash()
+    files = tuple(df.inputFiles())
+    # stale: the earlier application saw many splits for this plan
+    monkeypatch.setattr(util, "_SPREAD_MEMO",
+                        {(id(df.sparkSession), plan, files, target): 64})
+    assert util.spread(df).rdd.getNumPartitions() == target
+    assert util._SPREAD_MEMO[(spark.sparkContext.applicationId, plan,
+                              files, target)] == 1
